@@ -349,8 +349,13 @@ def _encode_record_batch(batch, gzip: bool, simplify: bool, codec: str):
         vd = pc.dictionary_encode(ent.field("value"))
         ktab = kd.dictionary.to_pylist()
         kidx = kd.indices.to_numpy(zero_copy_only=False)
-        vtab = vd.dictionary.to_pylist()
-        vidx = vd.indices.to_numpy(zero_copy_only=False)
+        # a null map value has a null index, and one null turns the whole
+        # batch's indices into float64 NaN on to_numpy: route nulls to a
+        # trailing None slot so they decode as (k, None)
+        vtab = vd.dictionary.to_pylist() + [None]
+        vidx = pc.fill_null(vd.indices, len(vtab) - 1).to_numpy(
+            zero_copy_only=False
+        )
         plens = pc.fill_null(pc.list_value_length(lst), 0).to_numpy(
             zero_copy_only=False
         )
@@ -591,11 +596,11 @@ def build_tiles(
     One DataFrame covering all zooms (unioned coverage) so Spark schedules a
     single shuffle; each (z,x,y) group encodes independently. The group is
     gathered with collect_list (partial-aggregated map-side) and whole tiles
-    are encoded in batches by a scalar pandas UDF — byte-identical to the
+    are encoded in batches by a mapInArrow encoder — byte-identical to the
     per-group applyInPandas path, minus its per-tile Python overhead. Tile
     encode must see the WHOLE group to be byte-stable (MVT dictionaries +
     merge are order-sensitive), so groups are never split; rows are sorted
-    by feature_id inside the UDF for shuffle-order independence.
+    by feature_id inside the encoder for shuffle-order independence.
     """
     n_shuffle = int(
         features.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")

@@ -26,7 +26,6 @@ a partition spec + sorted write; see plans/checkpoint.py for the mapping.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def write_bucketed(
@@ -92,19 +91,11 @@ def bucketed_spatial_join(
 ) -> DataFrame:
     """The shuffle-path spatial join reading pre-bucketed sides: cell
     equi-join (no exchange — co-located buckets) → native bbox filter →
-    exact Arrow PIP refine. Output identical to
-    ``spatial_join(..., broadcast=False)``; asserted in tests."""
-    from ..functions import tile_exprs as TX
-    from ..operators.spatial_join import pip_udf
+    exact Arrow PIP refine. Output identical to ``spatial_join``'s shuffle
+    path (``max_dim_features=0``); asserted in tests."""
+    from ..operators.spatial_join import _shuffle_join
 
-    pts = spark.table(points_table)
-    cells = spark.table(features_table)
-    joined = pts.join(cells, ["cell_x", "cell_y"], "inner")
-    coarse = joined.filter(
-        TX.point_in_bbox(
-            F.col("lon"), F.col("lat"),
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-        )
+    return _shuffle_join(
+        spark.table(points_table), spark.table(features_table),
+        point_cols + feature_cols,
     )
-    refined = coarse.filter(pip_udf(F.col("lon"), F.col("lat"), F.col("wkb")))
-    return refined.select(*[F.col(c) for c in point_cols + feature_cols])

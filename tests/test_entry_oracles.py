@@ -86,3 +86,20 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"doc_id", "feature_id"}
+
+
+def test_driver_window_marker_after_entry_50():
+    """The driver certifies the FIRST 50 queries() entries; the comment that
+    closes that window must sit right after entry 50, or the ordering kept
+    by hand silently drifts past it."""
+    import inspect
+    import re
+
+    n, marker_at = 0, None
+    for line in inspect.getsource(entrymod.queries).splitlines():
+        if re.match(r'\s+"\w+": q_\w+,$', line):
+            n += 1
+        elif "past the driver's 50-row window" in line:
+            marker_at = n
+    assert n == len(QUERIES)  # every entry counted
+    assert marker_at == 50

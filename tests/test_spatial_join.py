@@ -129,7 +129,7 @@ def test_interior_cell_shortcut_identity(spark):
     }
     b = {
         (r.url, r.feature_id)
-        for r in spatial_join(pts, feats, zoom=9, broadcast=False).collect()
+        for r in spatial_join(pts, feats, zoom=9, max_dim_features=0).collect()
     }
     assert a == b and len(a) > 0
 
@@ -294,29 +294,87 @@ def test_native_pip_refine_equals_arrow(spark, pages_df, features_df):
     """The pure-Catalyst ray-cast (functions/pip_native.py) must produce the
     identical join result to the Arrow kernel — a differential check of two
     independent implementations of Point.InPolygon — and its plan must
-    contain no Python stage at all."""
+    contain no Python stage at all. The native plan is built here: broadcast
+    cell dim → bbox filter → broadcast per-feature edge dim → pip_native."""
     import contextlib
     import io
     import re
 
-    from grandine_spark.operators.spatial_join import spatial_join
+    from grandine_spark.functions.pip_native import (
+        GEO_DIM_SCHEMA,
+        feature_edge_row,
+        pip_native,
+    )
+    from grandine_spark.kernels.tilemath import coverage
+    from grandine_spark.kernels.wkb import geom_bbox
+    from grandine_spark.operators.spatial_join import index_points, spatial_join
 
     pts = geocode_pages(pages_df)
+    polys = {
+        int(r.feature_id): from_wkb(bytes(r.wkb))[1]
+        for r in features_df.filter(F.col("geom_type") == 3)
+        .select("feature_id", "wkb")
+        .collect()
+    }
+    dim = spark.createDataFrame(
+        [
+            (cx, cy, fid, *bb)
+            for fid, rings in polys.items()
+            for bb in [geom_bbox(3, rings)]
+            for cx, cy, _ in coverage(*bb, 6)
+        ],
+        "cell_x long, cell_y long, feature_id long, minx double, "
+        "miny double, maxx double, maxy double",
+    )
+    geo = spark.createDataFrame(
+        [feature_edge_row(fid, rings) for fid, rings in polys.items()],
+        GEO_DIM_SCHEMA,
+    )
+    native = (
+        index_points(pts, 6)
+        .join(F.broadcast(dim), ["cell_x", "cell_y"])
+        .filter(
+            TX.point_in_bbox(
+                F.col("lon"), F.col("lat"),
+                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
+            )
+        )
+        .join(F.broadcast(geo), "feature_id")
+        .filter(
+            pip_native(
+                F.col("lon"), F.col("lat"), F.col("ox"), F.col("oy"),
+                F.col("rox"), F.col("roy"), F.col("edges"),
+            )
+        )
+        .select("url", "feature_id")
+    )
     a = {
         (r.url, r.feature_id)
-        for r in spatial_join(pts, features_df, zoom=6, refine="arrow").collect()
+        for r in spatial_join(pts, features_df, zoom=6).collect()
     }
-    b = {
-        (r.url, r.feature_id)
-        for r in spatial_join(pts, features_df, zoom=6, refine="native").collect()
-    }
+    b = {(r.url, r.feature_id) for r in native.collect()}
     assert a == b and len(a) > 0
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        spatial_join(pts, features_df, zoom=6, refine="native").explain("formatted")
+        native.explain("formatted")
     plan = buf.getvalue()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert not re.findall(r"\bExchange \(\d+\)", plan)  # still zero shuffles
+
+
+def test_joins_on_empty_feature_side(spark, pages_df):
+    """A feature table with neither polygons nor lines yields zero rows from
+    every join — multires used to raise IndexError on its empty zoom list."""
+    from grandine_spark.operators.spatial_join import (
+        multires_spatial_join,
+        radius_join,
+    )
+
+    pts = geocode_pages(pages_df)
+    pois = synth.features(spark, n_polygons=0, n_roads=0, n_pois=20)
+    assert spatial_join(pts, pois).count() == 0
+    assert multires_spatial_join(pts, pois).count() == 0
+    assert radius_join(pts, pois, radius_deg=1.5).count() == 0
 
 
 def test_radius_join_polar_dateline_differ(spark):

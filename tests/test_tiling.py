@@ -130,3 +130,39 @@ def test_write_tiles_s3(spark, features_df, tmp_path):
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def test_build_tiles_null_prop_value(spark):
+    """A null props value must not crash the Arrow encoder — one null used to
+    turn the whole batch's value indices into float64 NaN — and each tile
+    must equal the scalar kernels/mvt.encode_tile of the same features."""
+    from grandine_spark.kernels.mvt import encode_tile
+    from grandine_spark.kernels.wkb import from_wkb, geom_bbox, to_wkb
+    from grandine_spark.sources.synth import FEATURE_SCHEMA
+
+    z = 7
+    square = [[(10.0, 10.0), (10.5, 10.0), (10.5, 10.5), (10.0, 10.5)]]
+    rows = [
+        (fid, "base", gt, bytearray(to_wkb(gt, coords)),
+         *geom_bbox(gt, from_wkb(to_wkb(gt, coords))[1]), None, None, props)
+        for fid, gt, coords, props in [
+            (1, 3, square, {"name": None, "kind": "park"}),
+            (2, 1, (10.2, 10.3), {"name": "kiosk", "note": None}),
+            (3, 1, (10.4, 10.1), {"name": "bench"}),
+        ]
+    ]
+    feats = spark.createDataFrame(rows, FEATURE_SCHEMA)
+    got = {
+        (r.tile_z, r.tile_x, r.tile_y): bytes(r.tile)
+        for r in build_tiles(feats, [z]).collect()
+    }
+
+    by_tile: dict[tuple, dict] = {}
+    for r in sorted(feats.collect(), key=lambda r: r.feature_id):
+        gt, coords = from_wkb(bytes(r.wkb))
+        for cx, cy, _ in kernel_coverage(r.minx, r.miny, r.maxx, r.maxy, z):
+            by_tile.setdefault((z, cx, cy), {}).setdefault("default", []).append(
+                {"geom_type": gt, "coords": coords, "props": dict(r.props)}
+            )
+    want = {k: encode_tile(bl, k[1], k[2], z) for k, bl in by_tile.items()}
+    assert got == {k: b for k, b in want.items() if b is not None} and got
