@@ -232,7 +232,8 @@ def extract_links(html: Column, base_url: Column) -> Column:
     fragments stripped, resolved against ``base_url`` — absolute http(s)
     kept as-is, scheme-relative ``//h/p`` gains the base scheme,
     root-relative ``/p`` and relative ``p`` resolve against the base origin
-    / directory with ``/./`` and up to four ``/seg/../`` levels collapsed
+    / directory, query-only ``?q`` against the full base path (RFC 3986
+    §5.2.2), with ``/./`` and up to four ``/seg/../`` levels collapsed
     (deeper or root-escaping dot-segments drop the link rather than emit a
     malformed URL). ``javascript:``/``mailto:``/``data:``/``tel:`` and
     empty targets are dropped. When the base URL itself has no parseable
@@ -260,6 +261,8 @@ def extract_links(html: Column, base_url: Column) -> Column:
     # directory of the base path: strip the last segment; '' -> '/'
     basedir = F.regexp_replace(path, "[^/]*$", "")
     basedir = F.when(basedir == "", F.lit("/")).otherwise(basedir)
+    # a query-only href keeps the WHOLE base path (RFC 3986 §5.2.2)
+    basepath = F.when(path == "", F.lit("/")).otherwise(path)
 
     cands = F.concat(
         F.regexp_extract_all(html, F.lit(_HREF_DQ_RE), F.lit(1)),
@@ -280,9 +283,9 @@ def extract_links(html: Column, base_url: Column) -> Column:
         upath = F.regexp_extract(u, "^([^?]*)", 1)
         uquery = F.regexp_extract(u, "(\\?.*)$", 1)  # '' when absent
         rel = _collapse(
-            F.when(upath.startswith("/"), upath).otherwise(
-                F.concat(basedir, upath)
-            )
+            F.when(upath.startswith("/"), upath)
+            .when(upath == "", basepath)
+            .otherwise(F.concat(basedir, upath))
         )
         return (
             F.when(u == "", F.lit(None).cast("string"))
@@ -317,6 +320,7 @@ def extract_links_sql(html: str, base_url: str) -> str:
         f"(CASE WHEN regexp_replace({path}, '[^/]*$', '') = '' THEN '/' "
         f"ELSE regexp_replace({path}, '[^/]*$', '') END)"
     )
+    basepath = f"(CASE WHEN {path} = '' THEN '/' ELSE {path} END)"
     # DuckDB single-quoted literals keep backslashes verbatim — only the
     # quote character needs escaping (the url_sql_parts convention)
     dq = _HREF_DQ_RE.replace("'", "''")
@@ -331,6 +335,7 @@ def extract_links_sql(html: str, base_url: str) -> str:
     base_ok = f"({scheme} <> '' AND {host} <> '')"
     rel = (
         f"(CASE WHEN {upath} LIKE '/%' THEN {upath} "
+        f"WHEN {upath} = '' THEN {basepath} "
         f"ELSE {basedir} || {upath} END)"
     )
     for pat in (_DOT1_RE, _DOT1_RE, _DOTDOT_RE, _DOTDOT_RE, _DOTDOT_RE,

@@ -520,11 +520,16 @@ def substring_dedup_clean(
     text_col: str = "text",
     window: int = 8,
 ) -> DataFrame:
-    """The REMOVAL half of the Lee et al. 2022 exact-substring pass
-    (:func:`substring_dup_stats` is the measurement half): drop every
-    token position covered by at least one ``window``-token window whose
-    (lowercased) text occurs >= 2 times anywhere in the corpus, and
-    rebuild each document from the surviving tokens in order.
+    """A DROP-ALL variant of the removal half of the Lee et al. 2022
+    exact-substring pass (:func:`substring_dup_stats` is the measurement
+    half): drop every token position covered by at least one
+    ``window``-token window whose (lowercased) text occurs >= 2 times
+    anywhere in the corpus, and rebuild each document from the surviving
+    tokens in order.
+
+    Unlike Lee et al., who keep one copy of each duplicated span, this
+    removes EVERY copy, the first occurrence included: a window that
+    occurs twice leaves neither document with its tokens.
 
     Returns one row per input document:
     (id_col, n_tokens, kept_tokens, clean_text) — ``clean_text`` is the

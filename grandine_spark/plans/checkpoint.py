@@ -12,6 +12,17 @@ Iceberg tables (``writeTo(...).createOrReplace()``, snapshot metadata as the
 marker, a lineage table instead of the sidecar); the Iceberg runtime jar is
 not available in this sandbox, so the parquet backend is the tested one.
 
+A stage is built lazily: ``checkpoint`` takes a zero-argument builder and
+calls it only when the stage is not done, so a resumed stage plans nothing
+and runs no driver-side work (e.g. the join's dim build). A stage that runs
+is written once through Spark and read back with its known schema (no
+footer-inference job). Its lineage is computed by Spark over the READ-BACK
+table, so the digest describes what is on disk, and collected to the
+driver — at most ``n_buckets`` rows — which writes the sidecar with
+pyarrow. The commit is ordered: the sidecar lands by rename of a finished
+temporary directory, then ``_STAGE_DONE`` by rename of a temporary file, so
+a stage is done only once both are whole.
+
 Lineage digests are ORDER- and PARTITIONING-INDEPENDENT: each row hashes via
 xxhash64 of its JSON form, rows are bucketed by a deterministic key hash
 (NOT spark_partition_id, which is plan-dependent), and the per-bucket digest
@@ -22,9 +33,15 @@ same lineage bytes, which the tests assert.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _DONE = "_STAGE_DONE"
 # row hashes bounded to 2^32 so an ANSI-mode SUM stays in int64 up to 2^31
@@ -74,22 +91,41 @@ class Warehouse:
         )
 
     # -- checkpoint / resume -----------------------------------------------------
-    def checkpoint(self, df: DataFrame, stage: str, key_col: str) -> DataFrame:
-        """Write ``df`` as the stage table + lineage, unless the stage is
-        already complete — then just read it back (RESUME path, no
-        recompute). Returns the checkpointed DataFrame."""
+    def checkpoint(
+        self, build: Callable[[], DataFrame], stage: str, key_col: str
+    ) -> DataFrame:
+        """Write ``build()`` as the stage table + lineage, unless the stage
+        is already complete — then just read it back (RESUME path: ``build``
+        is never called). Returns the checkpointed DataFrame."""
         path = self.table_path(stage)
         if self.is_done(stage):
             return self.spark.read.parquet(path)
 
+        df = build()
         df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
-        self._lineage(out, stage, key_col).write.mode("overwrite").parquet(
-            self.lineage_path(stage)
-        )
-        with open(os.path.join(path, _DONE), "w") as f:
+        out = self.spark.read.schema(df.schema).parquet(path)
+        self._write_sidecar(self._lineage(out, stage, key_col), stage)
+        tmp = os.path.join(path, _DONE + ".tmp")
+        with open(tmp, "w") as f:
             f.write("ok")
+        os.replace(tmp, os.path.join(path, _DONE))
         return out
+
+    def _write_sidecar(self, lineage: DataFrame, stage: str) -> None:
+        """Collect the lineage rows and write them as the stage's sidecar:
+        one parquet file in a temporary directory, renamed into place."""
+        table = pa.Table.from_pylist(
+            [r.asDict() for r in lineage.collect()],
+            schema=to_arrow_schema(lineage.schema),
+        )
+        dest = self.lineage_path(stage)
+        tmp = tempfile.mkdtemp(prefix=f".{stage}__lineage.", dir=self.root)
+        try:
+            pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+            shutil.rmtree(dest, ignore_errors=True)
+            os.replace(tmp, dest)
+        finally:  # a no-op once the rename has happened
+            shutil.rmtree(tmp, ignore_errors=True)
 
     def lineage(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self.lineage_path(stage))

@@ -12,9 +12,11 @@ Stages (each checkpointed to the warehouse):
   4. cellcounts  — per-cell page counts                 [raster]
   5. tiles       — MVT bytes per (z,x,y) from features  [tiler]
 
-A killed run re-invokes ``run_pipeline``; completed stages are read back
-(not recomputed), incomplete ones re-run. Outputs are deterministic, so a
-resumed run is byte-identical to an uninterrupted one (tested).
+Each stage is handed to the warehouse as a builder, so a killed run that
+re-invokes ``run_pipeline`` reads completed stages back without building
+their plans (not recomputed, no driver-side work); incomplete ones re-run.
+Outputs are deterministic, so a resumed run is byte-identical to an
+uninterrupted one (tested).
 """
 
 from __future__ import annotations
@@ -64,29 +66,32 @@ def run_pipeline(
     wh = Warehouse(spark, warehouse_root)
 
     if clean_text:
-        pages = wh.checkpoint(clean_pages(pages), "clean_pages", key_col="url")
+        pages = wh.checkpoint(lambda: clean_pages(pages), "clean_pages", key_col="url")
 
-    pts = geocode_pages(pages).select(
-        "url", F.sha2(F.col("text"), 256).alias("text_sha"), "lon", "lat"
+    geocoded = wh.checkpoint(
+        lambda: geocode_pages(pages).select(
+            "url", F.sha2(F.col("text"), 256).alias("text_sha"), "lon", "lat"
+        ),
+        "geocoded",
+        key_col="url",
     )
-    geocoded = wh.checkpoint(pts, "geocoded", key_col="url")
 
     join_rows = wh.checkpoint(
-        spatial_join(geocoded, features, zoom=join_zoom),
+        lambda: spatial_join(geocoded, features, zoom=join_zoom),
         "join_rows",
         key_col="url",
     )
 
     assignments = wh.checkpoint(
-        tile_assignments(geocoded, list(zooms)), "assignments", key_col="url"
+        lambda: tile_assignments(geocoded, list(zooms)), "assignments", key_col="url"
     )
 
     cellcounts = wh.checkpoint(
-        rasterize_points(geocoded, max(zooms)), "cellcounts", key_col="tile_x"
+        lambda: rasterize_points(geocoded, max(zooms)), "cellcounts", key_col="tile_x"
     )
 
     tiles = wh.checkpoint(
-        build_tiles(features, list(zooms)), "tiles", key_col="tile_x"
+        lambda: build_tiles(features, list(zooms)), "tiles", key_col="tile_x"
     )
 
     return {

@@ -20,19 +20,122 @@ def _tiles_map(df):
 def test_checkpoint_skips_recompute(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     src = spark.range(100).withColumn("v", F.col("id") * 2)
-    out1 = wh.checkpoint(src, "s1", key_col="id")
+    out1 = wh.checkpoint(lambda: src, "s1", key_col="id")
     assert out1.count() == 100
     # "corrupt" the upstream: if stage re-ran, it would see 1 row
-    out2 = wh.checkpoint(spark.range(1).withColumn("v", F.lit(0)), "s1", key_col="id")
+    calls = []
+
+    def corrupt():
+        calls.append(1)
+        return spark.range(1).withColumn("v", F.lit(0))
+
+    out2 = wh.checkpoint(corrupt, "s1", key_col="id")
     assert out2.count() == 100  # read back, not recomputed
+    assert calls == []  # the reused stage never even built its plan
+
+
+def _stage_sources(spark):
+    return {
+        "plain": (spark.range(300).withColumn("v", F.col("id") * 7), "id"),
+        "null_keys": (
+            spark.range(120).select(
+                F.when(F.col("id") % 3 == 0, F.lit(None))
+                .otherwise(F.concat(F.lit("u"), F.col("id").cast("string")))
+                .alias("url"),
+                F.col("id").alias("v"),
+            ),
+            "url",
+        ),
+        "empty": (spark.range(10).filter(F.col("id") < 0), "id"),
+    }
+
+
+@pytest.mark.parametrize("kind", ["plain", "null_keys", "empty"])
+def test_sidecar_matches_spark_lineage(spark, tmp_path, kind):
+    """The driver-written sidecar holds exactly the rows Spark's own
+    lineage aggregation gives over the stage table on disk, with the
+    Spark-visible column types of a Spark-written sidecar."""
+    src, key = _stage_sources(spark)[kind]
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.checkpoint(lambda: src, kind, key_col=key)
+
+    stored = wh.lineage(kind)
+    assert stored.columns == [
+        "bucket", "key_min", "key_max", "row_count", "digest", "stage"
+    ]
+    assert [t for _, t in stored.dtypes] == [
+        "bigint", "string", "string", "bigint", "bigint", "string"
+    ]
+    want = wh._lineage(spark.read.parquet(wh.table_path(kind)), kind, key)
+    assert sorted(map(tuple, stored.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+    assert wh.verify(src, kind, key_col=key)
+
+
+def test_stage_commit_leaves_no_temp_files(spark, tmp_path):
+    root = tmp_path / "wh"
+    wh = Warehouse(spark, str(root))
+    wh.checkpoint(lambda: spark.range(40), "s1", key_col="id")
+    assert sorted(os.listdir(root)) == ["s1", "s1__lineage"]
+    leftovers = [
+        f for _, dirs, files in os.walk(root) for f in dirs + files if "tmp" in f
+    ]
+    assert leftovers == []
+    assert wh.is_done("s1")
+
+
+def test_missing_marker_recomputes_despite_sidecar(spark, tmp_path):
+    """The marker is the commit point: a stage killed after its sidecar
+    landed but before ``_STAGE_DONE`` re-runs, and its sidecar is
+    replaced."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.checkpoint(lambda: spark.range(100), "s1", key_col="id")
+    os.remove(os.path.join(wh.table_path("s1"), "_STAGE_DONE"))
+    assert os.path.isdir(wh.lineage_path("s1"))
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(3)
+
+    assert wh.checkpoint(build, "s1", key_col="id").count() == 3
+    assert calls == [1]
+    assert wh.lineage("s1").agg(F.sum("row_count")).first()[0] == 3
+    assert wh.is_done("s1")
+
+
+def test_resumed_pipeline_does_not_rebuild_done_stages(spark, tmp_path, monkeypatch):
+    """With ``geocoded`` and ``join_rows`` done, a resumed run builds
+    neither: their operators are never called."""
+    import grandine_spark.plans.pipeline as pipeline
+
+    pages = synth.pages(spark, 300)
+    feats = synth.features(spark, n_polygons=20, n_roads=5, n_pois=5)
+    root = str(tmp_path / "wh")
+    first = run_pipeline(spark, pages, feats, root, zooms=[2])
+    want = sorted(map(tuple, first["join_rows"].collect()))
+    want_tiles = _tiles_map(first["tiles"])
+    for stage in ("assignments", "cellcounts", "tiles"):
+        shutil.rmtree(os.path.join(root, stage))
+
+    def boom(*a, **kw):
+        raise AssertionError("a done stage was rebuilt")
+
+    monkeypatch.setattr(pipeline, "spatial_join", boom)
+    monkeypatch.setattr(pipeline, "geocode_pages", boom)
+    resumed = run_pipeline(spark, pages, feats, root, zooms=[2])
+    assert sorted(map(tuple, resumed["join_rows"].collect())) == want
+    assert _tiles_map(resumed["tiles"]) == want_tiles
 
 
 def test_lineage_partitioning_invariant(spark, tmp_path):
     pages = synth.pages(spark, 500)
     wh1 = Warehouse(spark, str(tmp_path / "a"))
     wh8 = Warehouse(spark, str(tmp_path / "b"))
-    wh1.checkpoint(pages.coalesce(1), "pg", key_col="url")
-    wh8.checkpoint(pages.repartition(8), "pg", key_col="url")
+    wh1.checkpoint(lambda: pages.coalesce(1), "pg", key_col="url")
+    wh8.checkpoint(lambda: pages.repartition(8), "pg", key_col="url")
     l1 = {(r.bucket): (r.row_count, r.digest) for r in wh1.lineage("pg").collect()}
     l8 = {(r.bucket): (r.row_count, r.digest) for r in wh8.lineage("pg").collect()}
     assert l1 == l8
@@ -70,7 +173,7 @@ def test_verify_tolerates_legacy_sidecar(spark, tmp_path):
     columns."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     src = spark.range(200).withColumn("v", F.col("id") * 3)
-    wh.checkpoint(src, "s1", key_col="id")
+    wh.checkpoint(lambda: src, "s1", key_col="id")
     # rewrite the sidecar in the legacy (no key-range) format
     legacy = wh.lineage("s1").drop("key_min", "key_max")
     legacy.write.mode("overwrite").parquet(str(tmp_path / "legacy"))

@@ -248,3 +248,38 @@ def test_extract_links_sql_twin_fuzz(spark):
     sql = f"SELECT doc_id, {extract_links_sql('html', 'url')} AS links FROM t"
     want = {d: list(ls) for d, ls in con.execute(sql).fetchall()}
     assert got == want
+
+
+def test_extract_links_query_only_href_keeps_base_path(spark):
+    """RFC 3986 §5.2.2: a reference with an empty path keeps the base's
+    whole path (last segment included) and takes its own query — in the
+    Column form and in the DuckDB twin."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from grandine_spark.functions.url import extract_links, extract_links_sql
+
+    rows = [
+        (1, "http://www.ex.com/d1/d2/page.html?old=1", '<a href="?x=1">q</a>'),
+        (2, "https://h.org", "<a href='?p=2'>q</a>"),
+        (3, "https://h.org/dir/", '<a href="?p=2#frag">q</a>'),
+        (4, "https://h.org/a/b.html", '<a href="?">q</a><a href="c?d=1">r</a>'),
+    ]
+    want = {
+        1: ["http://www.ex.com/d1/d2/page.html?x=1"],
+        2: ["https://h.org/?p=2"],
+        3: ["https://h.org/dir/?p=2"],
+        4: ["https://h.org/a/b.html?", "https://h.org/a/c?d=1"],
+    }
+    df = spark.createDataFrame(rows, "doc_id long, url string, html string")
+    got = {
+        r.doc_id: list(r.links)
+        for r in df.select(
+            "doc_id", extract_links(F.col("html"), F.col("url")).alias("links")
+        ).collect()
+    }
+    assert got == want
+    con = duckdb.connect()
+    con.register("t", df.toPandas())
+    sql = f"SELECT doc_id, {extract_links_sql('html', 'url')} AS links FROM t"
+    assert {d: list(ls) for d, ls in con.execute(sql).fetchall()} == want
